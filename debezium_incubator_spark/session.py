@@ -86,6 +86,23 @@ def _ship_package(spark: SparkSession) -> None:
     sc._dis_pkg_shipped = True
 
 
+def _default_driver_memory() -> str:
+    """``min(48g, MemTotal / 2)``: the driver JVM of ``local[N]`` runs every
+    task, so it gets the box's memory up to the scale-run ceiling, but a
+    fixed 48g on a smaller box lets the heap outgrow physical memory and
+    the kernel OOM-kill the JVM. Falls back to 48g where ``/proc/meminfo``
+    is unreadable."""
+    cap_mb = 48 * 1024
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return f"{min(cap_mb, int(line.split()[1]) // 2048)}m"
+    except OSError:
+        pass
+    return f"{cap_mb}m"
+
+
 def get_spark(app_name: str = "debezium_incubator_spark",
               extra_conf: dict | None = None) -> SparkSession:
     """Engine session. ``extra_conf`` lets a deployment harness add
@@ -99,7 +116,9 @@ def get_spark(app_name: str = "debezium_incubator_spark",
         # ~cores for local; on a real cluster this scales with AQE
         # (coalescePartitions) so over-provisioning is cheap.
         .config("spark.sql.shuffle.partitions", str(max(int(cpus), 8)))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+                or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
     )

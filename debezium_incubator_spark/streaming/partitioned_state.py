@@ -17,12 +17,20 @@ Layout:
       manifest_v{epoch}.json          -- {"bucket": epoch_that_wrote_it}
       _LATEST                         -- name of the committed manifest
 
-Scale notes: n_buckets is the write-parallelism and rewrite granularity
-knob — size buckets so one bucket's rows fit an executor's memory
-(e.g. 100 TB / 4 GB ≈ 25k buckets). Bucket routing reuses the same hash
-for every batch, so merges are per-bucket local after one shuffle of the
-(small) batch; the big current-state side is read only for touched
-buckets and never shuffled (parquet dirs are bucket-aligned).
+Scale notes: n_buckets is the rewrite granularity knob — size buckets
+so one bucket's rows fit an executor's memory (e.g. 100 TB / 4 GB ≈ 25k
+buckets). Bucket routing reuses the same hash for every batch, so a
+merge is per-bucket local: the current state is read only for touched
+buckets (parquet dirs are bucket-aligned), and the batch plus those
+buckets go through ONE shuffle on the bucket id, which serves both the
+fold's window and the one-file-per-bucket write.
+
+Per-call cost is a fixed number of Spark jobs, whatever the batch size:
+the touched-bucket collect (skipped when the caller passes ``touched``)
+and the write. The input batch is evaluated once (a lineage cut feeds
+both), bucket row counts come from the footers of the files just written,
+and reads take the schema from parquet footers instead of an inference
+job (``_read_buckets``).
 """
 
 from __future__ import annotations
@@ -30,15 +38,75 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
+from ..lineage import cut
+
 BUCKET_COL = "__bucket"
+
+#: footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def _bucket(keys: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
+
+
+def _parquet_files(bucket_dir: str) -> list[str]:
+    """Data files of one bucket dir, skipping the hidden and ``_``-prefixed
+    entries Spark's reader skips too."""
+    return sorted(
+        os.path.join(bucket_dir, f) for f in os.listdir(bucket_dir)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
+def _nullable(schema_json):
+    """A schema's JSON form with every nullability flag set: file reads
+    make every column nullable anyway, so epochs that differ only there
+    (a first write from a non-null source) read the same."""
+    if isinstance(schema_json, dict):
+        return {
+            k: True if k in ("nullable", "containsNull", "valueContainsNull")
+            else _nullable(v)
+            for k, v in schema_json.items()
+        }
+    if isinstance(schema_json, list):
+        return [_nullable(v) for v in schema_json]
+    return schema_json
+
+
+def _read_buckets(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Read bucket dirs (``state_dir/v{e}/__bucket={b}``) as one frame.
+
+    Buckets live in DIFFERENT epochs, which can differ in schema after a
+    mid-stream DDL widening; a plain read would pick one file's schema and
+    silently drop the rest. Every epoch is one write with one schema, so
+    one footer per distinct epoch tells: when all of them carry the same
+    Spark row schema, it is passed to the reader and no inference job runs
+    (a ``mergeSchema`` read starts a footer-reading job on every call).
+    When they differ, or a footer lacks Spark's schema, the read falls
+    back to ``mergeSchema``."""
+    per_epoch: dict[str, str] = {}
+    for p in paths:
+        per_epoch.setdefault(os.path.dirname(os.path.normpath(p)), p)
+    try:
+        schemas = set()
+        for p in per_epoch.values():
+            raw = (pq.read_metadata(_parquet_files(p)[0]).metadata
+                   or {}).get(_SPARK_SCHEMA_KEY)
+            schemas.add(raw and json.dumps(_nullable(json.loads(raw)),
+                                           sort_keys=True))
+        if len(schemas) == 1 and None not in schemas:
+            schema = T.StructType.fromJson(json.loads(schemas.pop()))
+            return spark.read.schema(schema).parquet(*paths)
+    except (OSError, IndexError, ValueError):
+        pass  # unreadable or missing footer: let the inferring read decide
+    return spark.read.option("mergeSchema", "true").parquet(*paths)
 
 
 def _atomic_write(path: str, content: str) -> None:
@@ -119,8 +187,7 @@ def _read_manifest(state_dir: str) -> dict[int, int] | None:
         return {int(k): int(v) for k, v in json.load(f).items()}
 
 
-def _write_stats(spark: SparkSession, state_dir: str, epoch: int,
-                 vdir: str) -> dict[int, int]:
+def _write_stats(state_dir: str, epoch: int, vdir: str) -> dict[int, int]:
     """Per-bucket PHYSICAL row counts (tombstones included) of the
     buckets written under ``epoch`` → ``stats_v{epoch}.json``, committed
     by atomic rename BEFORE the manifest (commit order: data → stats →
@@ -128,20 +195,17 @@ def _write_stats(spark: SparkSession, state_dir: str, epoch: int,
     This is the table-format statistics idea (Iceberg/Delta manifests
     carry row counts): planning questions — total state size, bucket
     skew, when to grow ``n_buckets`` via ``compact_state`` — are
-    answered from KB-scale JSON, never a state scan. The counting job
-    reads back only THIS epoch's delta (touched buckets), O(batch)."""
-    if not os.path.isdir(vdir) or not any(
-        d.startswith(f"{BUCKET_COL}=") for d in os.listdir(vdir)
-    ):
-        counts: dict[int, int] = {}
-    else:
-        counts = {
-            int(r[BUCKET_COL]): int(r["cnt"])
-            for r in spark.read.parquet(vdir)
-            .groupBy(BUCKET_COL)
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
+    answered from KB-scale JSON, never a state scan. The counts are the
+    ``num_rows`` footer fields of the files this epoch just wrote: no
+    Spark job, and no data page is read."""
+    counts: dict[int, int] = {}
+    if os.path.isdir(vdir):
+        for d in os.listdir(vdir):
+            if d.startswith(f"{BUCKET_COL}="):
+                counts[int(d.split("=", 1)[1])] = sum(
+                    pq.read_metadata(f).num_rows
+                    for f in _parquet_files(os.path.join(vdir, d))
+                )
     _atomic_write(
         os.path.join(state_dir, f"stats_v{epoch}.json"),
         json.dumps({str(k): v for k, v in counts.items()}, sort_keys=True),
@@ -265,6 +329,9 @@ def apply_changes_partitioned(
     batch = batch.withColumn(BUCKET_COL, _bucket(keys, n_buckets))
     caller_touched = touched is not None
     if touched is None:
+        # the collect and the write both need the batch: cut it (DISK_ONLY,
+        # the wire-sized posture) so its upstream parse runs once, not twice
+        batch = cut(batch, "local_disk")
         touched = sorted(
             r[BUCKET_COL]
             for r in batch.select(BUCKET_COL).distinct().collect()
@@ -297,38 +364,36 @@ def apply_changes_partitioned(
     ]
     merged = batch
     if current_paths:
-        # mergeSchema: buckets live in DIFFERENT epochs, which can have
-        # different schemas after a mid-stream DDL widening — without it
-        # the read picks one file's schema and silently drops the rest
-        current = spark.read.option(
-            "mergeSchema", "true"
-        ).parquet(*current_paths).withColumn(
-            BUCKET_COL, _bucket(keys, n_buckets)
-        )
         # allowMissingColumns: schema-widened batches (mid-stream DDL
         # ADD COLUMN) merge cleanly; old bucket rows surface NULL
-        merged = current.unionByName(batch, allowMissingColumns=True)
-    w = W.partitionBy(*keys).orderBy(*[F.desc(p) for p in position])
+        merged = _read_buckets(spark, current_paths).withColumn(
+            BUCKET_COL, _bucket(keys, n_buckets)
+        ).unionByName(batch, allowMissingColumns=True)
+    # ONE shuffle, on the bucket id, serves both the fold and the write;
+    # untouched buckets are never read or written. A key's bucket is a
+    # function of the key, so a window over (bucket, keys) sees the same
+    # groups as one over keys, and hash partitioning on the bucket already
+    # satisfies its clustering: Catalyst plans no second exchange. Each
+    # bucket lands wholly in one task and the window's sort keeps it
+    # contiguous there, so the dynamic-partition write emits exactly one
+    # file per touched bucket (clustered by key instead, every task would
+    # hold rows of many buckets and write up to tasks x buckets files).
+    # Tasks are capped at the default parallelism: a task per bucket
+    # beyond the cores only adds scheduling.
+    n_parts = max(1, min(len(touched),
+                         spark.sparkContext.defaultParallelism))
+    w = W.partitionBy(BUCKET_COL, *keys).orderBy(
+        *[F.desc(p) for p in position]
+    )
     folded = (
-        merged.withColumn("__rn", F.row_number().over(w))
+        merged.repartition(n_parts, F.col(BUCKET_COL))
+        .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    # ONE job writes every touched bucket (dynamic partition dirs under
-    # this epoch); untouched buckets are never read or written. Cluster
-    # rows by bucket BEFORE the partitionBy write: the fold's window
-    # shuffle distributes by key hash, so without this every task holds
-    # rows of many buckets and the dynamic-partition write emits up to
-    # tasks x touched_buckets files (at 32 tasks x 488 buckets that is
-    # ~15k near-empty parquet files PER EPOCH — found by the round-5 CDC
-    # scale probe). Repartitioning on the bucket column lands each
-    # bucket wholly in one task → exactly one file per touched bucket,
-    # and per-bucket write parallelism = touched buckets. Same move
-    # Iceberg/Delta make (cluster by partition expression before write).
     vdir = os.path.join(state_dir, f"v{epoch}")
     (
-        folded.repartition(max(len(touched), 1), F.col(BUCKET_COL))
-        .write.mode("overwrite")
+        folded.write.mode("overwrite")
         .partitionBy(BUCKET_COL)
         .parquet(vdir)
     )
@@ -348,7 +413,7 @@ def apply_changes_partitioned(
                 f"not match written partition dirs {sorted(written)} in "
                 f"{vdir} — refusing to commit a lying manifest"
             )
-    _write_stats(spark, state_dir, epoch, vdir)
+    _write_stats(state_dir, epoch, vdir)
     manifest.update({b: epoch for b in touched})
     # Both commit files land by ATOMIC RENAME (write sibling .tmp, then
     # os.replace): a truncate-in-place `open(..., "w")` can leave a torn
@@ -377,9 +442,7 @@ def read_state_partitioned(
         os.path.join(state_dir, f"v{v}", f"{BUCKET_COL}={b}")
         for b, v in manifest.items()
     ]
-    # mergeSchema: see apply_changes_partitioned — cross-epoch buckets
-    # may differ in schema after a mid-stream DDL widening
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
+    df = _read_buckets(spark, paths)
     if not include_tombstones:
         df = df.filter(F.col(op_col) != "d").drop(op_col)
     return df
@@ -443,7 +506,7 @@ def read_state_partitioned_at(
             f"v{eligible[-1]} references reclaimed buckets "
             f"(e.g. {missing[0]})"
         )
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
+    df = _read_buckets(spark, paths)
     if not include_tombstones:
         df = df.filter(F.col(op_col) != "d").drop(op_col)
     return df
@@ -576,9 +639,7 @@ def compact_state(
         os.path.join(state_dir, f"v{v}", f"{BUCKET_COL}={b}")
         for b, v in manifest.items()
     ]
-    # mergeSchema: see apply_changes_partitioned — cross-epoch buckets
-    # may differ in schema after a mid-stream DDL widening
-    df = spark.read.option("mergeSchema", "true").parquet(*paths).withColumn(
+    df = _read_buckets(spark, paths).withColumn(
         BUCKET_COL, _bucket(keys, n_buckets)
     )
     dropped = 0
@@ -606,7 +667,7 @@ def compact_state(
         for d in os.listdir(vdir)
         if d.startswith(f"{BUCKET_COL}=")
     } if os.path.isdir(vdir) else {}
-    counts = _write_stats(spark, state_dir, epoch, vdir)
+    counts = _write_stats(state_dir, epoch, vdir)
     mf = f"manifest_v{epoch}.json"
     # canonical serialization (sort_keys): new_manifest is rebuilt from
     # os.listdir order here, so a crash-replay of this compaction must

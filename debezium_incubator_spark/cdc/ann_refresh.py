@@ -518,8 +518,8 @@ def ann_refresh_foreach_batch(
     index snapshot (route + dedup over CURRENT state) and commit it
     cell-partitioned under ``out_dir/epoch=<id>`` with an atomic
     ``_LATEST`` pointer. Epoch replays are idempotent end-to-end."""
+    from ..streaming.commit import commit_pointer
     from ..streaming.partitioned_state import (
-        _atomic_write,
         apply_changes_partitioned,
         read_state_partitioned,
     )
@@ -543,16 +543,9 @@ def ann_refresh_foreach_batch(
             snap.repartition("cell")
             .write.mode("overwrite").partitionBy("cell").parquet(snap_dir)
         )
-        _atomic_write(os.path.join(out_dir, "_LATEST"), f"epoch={epoch}")
+        commit_pointer(out_dir, f"epoch={epoch}")
 
     return handle
-
-
-def read_latest_index(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The committed index snapshot (follows the ``_LATEST`` pointer)."""
-    from ..streaming.partitioned_state import read_latest_pointer
-
-    return read_latest_pointer(spark, out_dir)
 
 
 # --- incremental form: cell-scoped refresh (r11 verdict #3) -----------------
@@ -591,17 +584,13 @@ def read_latest_index(spark: SparkSession, out_dir: str) -> DataFrame:
 # guard then re-commits byte-identical content.
 
 
-def _cell_manifest(tier_dir: str) -> dict[int, int]:
-    from ..streaming.partitioned_state import _read_manifest
-
-    return _read_manifest(tier_dir) or {}
-
-
 def _read_cells(spark: SparkSession, tier_dir: str,
                 cells: list[int] | None = None) -> DataFrame | None:
     """Assemble tier rows from each cell's latest committed epoch;
     ``cells`` restricts the read to those directories (None = all)."""
-    manifest = _cell_manifest(tier_dir)
+    from ..streaming.partitioned_state import _read_manifest
+
+    manifest = _read_manifest(tier_dir) or {}
     want = manifest if cells is None else {
         c: e for c, e in manifest.items() if c in set(cells)
     }
@@ -631,12 +620,13 @@ def _read_cells(spark: SparkSession, tier_dir: str,
 def _commit_cells(df: DataFrame, tier_dir: str, epoch: int,
                   touched: list[int]) -> None:
     """Write ``df`` (must carry ``cell``) partitioned by cell under
-    ``v{epoch}`` and commit manifest + ``_LATEST`` (atomic renames,
-    split-brain-guarded — the partitioned-state protocol)."""
+    ``v{epoch}`` and commit its manifest and pointer (the partitioned-
+    state protocol, split-brain-guarded)."""
     from ..streaming.partitioned_state import (
-        _atomic_write,
         _commit_manifest,
         _manifest_dumps,
+        _read_manifest,
+        _written_parts,
     )
 
     vdir = os.path.join(tier_dir, f"v{epoch}")
@@ -649,10 +639,7 @@ def _commit_cells(df: DataFrame, tier_dir: str, epoch: int,
     # directory for it, so it must LEAVE the manifest rather than
     # point at a missing path (the compact_state emptied-bucket rule;
     # found by the randomized-history differential in round 12)
-    written = {
-        int(d.split("=", 1)[1])
-        for d in os.listdir(vdir) if d.startswith("cell=")
-    } if os.path.isdir(vdir) else set()
+    written = _written_parts(vdir, col="cell")
     # the converse is a PROTOCOL violation, never a legal state: a cell
     # present in df but absent from ``touched`` was physically written
     # yet would be silently dropped from the manifest (its vectors
@@ -666,16 +653,13 @@ def _commit_cells(df: DataFrame, tier_dir: str, epoch: int,
             "batch mismatch; refusing to commit a manifest that would "
             "drop them"
         )
-    manifest = _cell_manifest(tier_dir)
+    manifest = _read_manifest(tier_dir) or {}
     for c in touched:
         if c in written:
             manifest[c] = epoch
         else:
             manifest.pop(c, None)
     _commit_manifest(tier_dir, epoch, _manifest_dumps(manifest))
-    _atomic_write(
-        os.path.join(tier_dir, "_LATEST"), f"manifest_v{epoch}.json"
-    )
 
 
 #: target lookup-tier keys per bucket under the derived sizing rule
@@ -720,15 +704,14 @@ def ann_refresh_incremental_foreach_batch(
 
     from ..lineage import cut as _cut
 
+    from ..streaming.commit import atomic_write
     from ..streaming.partitioned_state import (
-        _atomic_write,
         _bucket,
-        apply_changes_partitioned,
+        _bucket_paths,
         _read_manifest,
-        BUCKET_COL,
+        apply_changes_partitioned,
+        pinned_bucket_count,
     )
-
-    from ..streaming.partitioned_state import pinned_bucket_count
 
     members_dir = os.path.join(index_dir, "members")
     survivors_dir = os.path.join(index_dir, "survivors")
@@ -771,10 +754,9 @@ def ann_refresh_incremental_foreach_batch(
         cells_src = routed.select("cell")
         lk_manifest = _read_manifest(lookup_dir) or {}
         if lk_manifest:
-            paths = [
-                os.path.join(lookup_dir, f"v{e}", f"{BUCKET_COL}={b}")
-                for b, e in lk_manifest.items() if b in set(key_buckets)
-            ]
+            paths = _bucket_paths(lookup_dir, {
+                b: e for b, e in lk_manifest.items() if b in set(key_buckets)
+            })
             if paths:
                 prior = spark.read.parquet(*paths).filter(
                     F.col("__op") != "d"
@@ -812,7 +794,7 @@ def ann_refresh_incremental_foreach_batch(
                 )
             touched = persisted
         else:
-            _atomic_write(tpath, _json.dumps(touched))
+            atomic_write(tpath, _json.dumps(touched))
         if touched:
             # members: (old ∖ batch keys) ∪ routed, touched cells only
             old_members = _read_cells(spark, members_dir, touched)

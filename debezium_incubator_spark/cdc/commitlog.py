@@ -609,7 +609,8 @@ def commitlog_merge_foreach_batch(
 
     from pyspark.sql import functions as F
 
-    from ..streaming.upsert import _commit_pointer, _latest_path
+    from ..streaming.commit import atomic_write, commit_pointer
+    from ..streaming.upsert import _latest_path
     from .cassandra import merge_cassandra_cells
 
     def _epoch_prev(path: str) -> str | None:
@@ -664,9 +665,11 @@ def commitlog_merge_foreach_batch(
         new_tombs.write.mode("overwrite").parquet(
             os.path.join(out, "tombs")
         )
-        with open(os.path.join(out, "_PREV"), "w") as f:
-            f.write(os.path.basename(prev) if prev is not None else "")
-        _commit_pointer(state_dir, out_name)
+        atomic_write(
+            os.path.join(out, "_PREV"),
+            os.path.basename(prev) if prev is not None else "",
+        )
+        commit_pointer(state_dir, out_name)
 
     return handle
 

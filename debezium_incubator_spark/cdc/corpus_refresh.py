@@ -225,8 +225,8 @@ def corpus_refresh_foreach_batch(
     state apply refuses divergent same-epoch commits, the snapshot
     rewrite is deterministic, and the pointer re-commits the same
     value."""
+    from ..streaming.commit import commit_pointer
     from ..streaming.partitioned_state import (
-        _atomic_write,
         apply_changes_partitioned,
         read_state_partitioned,
     )
@@ -244,16 +244,9 @@ def corpus_refresh_foreach_batch(
         curate_docs_v3(spark, corpus).write.mode("overwrite").parquet(
             snap_dir
         )
-        _atomic_write(os.path.join(out_dir, "_LATEST"), f"epoch={epoch}")
+        commit_pointer(out_dir, f"epoch={epoch}")
 
     return handle
-
-
-def read_latest_corpus(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The committed corpus snapshot (follows the ``_LATEST`` pointer)."""
-    from ..streaming.partitioned_state import read_latest_pointer
-
-    return read_latest_pointer(spark, out_dir)
 
 
 def start_corpus_refresh_stream(

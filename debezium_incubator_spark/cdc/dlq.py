@@ -78,12 +78,6 @@ def parse_with_dlq(
     return valid, dead
 
 
-def dlq_sink_path(state_dir: str) -> str:
-    """Convention: dead letters land beside the state they failed to
-    reach (replay = read, fix, feed back through the pipeline)."""
-    return f"{state_dir}/_dead_letter"
-
-
 def parse_with_failure_mode(
     raw: DataFrame,
     row_schema: T.StructType,

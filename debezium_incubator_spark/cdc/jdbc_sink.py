@@ -93,9 +93,9 @@ def jdbc_sink_apply(
             batch, allowMissingColumns=True
         )
         merged.write.mode("overwrite").parquet(out)
-        from ..streaming.upsert import _commit_pointer
+        from ..streaming.commit import commit_pointer
 
-        _commit_pointer(state_dir, f"v{epoch}")
+        commit_pointer(state_dir, f"v{epoch}")
         return
 
     if insert_mode == "update" and current is not None:

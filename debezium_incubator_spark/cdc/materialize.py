@@ -285,7 +285,8 @@ def apply_changes_lob_batch(
     so the inheritance chain re-roots every epoch and per-batch cost is
     O(touched keys' rows), not O(history). Fault posture identical to
     apply_changes_batch (versioned dirs + atomic _LATEST)."""
-    from ..streaming.upsert import _commit_pointer, read_state
+    from ..streaming.commit import commit_pointer
+    from ..streaming.upsert import read_state
     import os
 
     current = read_state(spark, state_dir, include_tombstones=True)
@@ -303,7 +304,7 @@ def apply_changes_lob_batch(
     )
     out = os.path.join(state_dir, f"v{epoch}")
     new_state.write.mode("overwrite").parquet(out)
-    _commit_pointer(state_dir, f"v{epoch}")
+    commit_pointer(state_dir, f"v{epoch}")
 
 
 # --- I5 batch analog: exact dedup of an at-least-once stream -------------

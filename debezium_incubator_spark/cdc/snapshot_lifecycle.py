@@ -36,7 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..streaming.partitioned_state import _atomic_write
+from ..streaming.commit import atomic_write
 from .incremental_snapshot import snapshot_chunk
 from .notifications import AGGREGATE_INCREMENTAL
 
@@ -135,7 +135,7 @@ class ChunkedSnapshotRunner:
             return json.load(f)
 
     def _write_bookmark(self, next_chunk: int, status: str) -> None:
-        _atomic_write(
+        atomic_write(
             self._bookmark_path(),
             json.dumps({"next_chunk": next_chunk, "status": status}),
         )

@@ -207,8 +207,8 @@ def training_shards_foreach_batch(
     → refresh semantics) and commit it under ``out_dir/epoch=<id>``
     with an atomic ``_LATEST`` pointer. Epoch replays are idempotent
     end-to-end (the corpus-refresh discipline)."""
+    from ..streaming.commit import commit_pointer
     from ..streaming.partitioned_state import (
-        _atomic_write,
         apply_changes_partitioned,
         read_state_partitioned,
     )
@@ -226,16 +226,9 @@ def training_shards_foreach_batch(
         training_shards(spark, corpus).write.mode("overwrite").parquet(
             snap_dir
         )
-        _atomic_write(os.path.join(out_dir, "_LATEST"), f"epoch={epoch}")
+        commit_pointer(out_dir, f"epoch={epoch}")
 
     return handle
-
-
-def read_latest_shards(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The committed shard snapshot (follows the ``_LATEST`` pointer)."""
-    from ..streaming.partitioned_state import read_latest_pointer
-
-    return read_latest_pointer(spark, out_dir)
 
 
 # --- incremental form: metrics-cached shard refresh (r12 verdict #6) -------
@@ -546,8 +539,8 @@ def training_shards_incremental_foreach_batch(
 
     The committed snapshot equals :func:`training_shards_pinned` over
     the delivered corpus at every epoch (equality-pinned in tests)."""
+    from ..streaming.commit import atomic_write, commit_pointer
     from ..streaming.partitioned_state import (
-        _atomic_write,
         apply_changes_partitioned,
         pinned_bucket_count,
         read_state_partitioned,
@@ -595,7 +588,7 @@ def training_shards_incremental_foreach_batch(
                 ).select("doc_id", "text"),
                 lm_dir,
             )
-            _atomic_write(lm_marker, "ready")
+            atomic_write(lm_marker, "ready")
         pairs = spark.read.parquet(lm_dir)
         # texts the metrics tier (epochs < e) has never seen — replays
         # must NOT derive against the epoch's own committed rows, or
@@ -618,7 +611,7 @@ def training_shards_incremental_foreach_batch(
         )
         snap_dir = os.path.join(out_dir, f"epoch={epoch}")
         snap.write.mode("overwrite").parquet(snap_dir)
-        _atomic_write(os.path.join(out_dir, "_LATEST"), f"epoch={epoch}")
+        commit_pointer(out_dir, f"epoch={epoch}")
 
     return handle
 

@@ -225,7 +225,7 @@ def vocab_refresh_foreach_batch(
     comment above)."""
     import os
 
-    from ..streaming.partitioned_state import _atomic_write
+    from ..streaming.commit import commit_pointer
     from .bpe import bpe_token_count
 
     def handle(batch: DataFrame, epoch: int) -> None:
@@ -241,23 +241,15 @@ def vocab_refresh_foreach_batch(
         )
         vdir = os.path.join(vocab_dir, f"epoch={epoch}")
         vocab.coalesce(1).write.mode("overwrite").parquet(vdir)
-        _atomic_write(os.path.join(vocab_dir, "_LATEST"), f"epoch={epoch}")
+        commit_pointer(vocab_dir, f"epoch={epoch}")
         toks = corpus.select(
             "doc_id", bpe_token_count("text", merges).alias("n_bpe")
         )
         tdir = os.path.join(tokens_dir, f"epoch={epoch}")
         toks.write.mode("overwrite").parquet(tdir)
-        _atomic_write(os.path.join(tokens_dir, "_LATEST"), f"epoch={epoch}")
+        commit_pointer(tokens_dir, f"epoch={epoch}")
 
     return handle
-
-
-def read_latest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The committed artifact behind the ``_LATEST`` pointer (works for
-    both the vocab and the tokens tiers)."""
-    from ..streaming.partitioned_state import read_latest_pointer
-
-    return read_latest_pointer(spark, out_dir)
 
 
 def start_vocab_refresh_stream(

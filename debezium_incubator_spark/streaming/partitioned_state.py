@@ -5,15 +5,15 @@
 correct, but O(state) writes. Here state is hash-bucketed by key
 (``pmod(xxhash64(keys), n_buckets)``) and each micro-batch rewrites ONLY
 the buckets its keys touch: O(touched buckets), not O(state). A JSON
-manifest maps bucket -> the epoch that last rewrote it; the manifest
-write is the atomic commit point (same protocol as upsert's ``_LATEST``
-marker — data first, then pointer). This is the minimal table-format
-idea (Iceberg/Delta manifests) expressed with plain parquet + JSON,
-since this environment has no table-format jars.
+manifest maps bucket -> the epoch that last rewrote it, and each epoch
+commits by the protocol stated in ``commit.py``. This is the minimal
+table-format idea (Iceberg/Delta manifests) expressed with plain
+parquet + JSON, since this environment has no table-format jars.
 
 Layout:
     state_dir/
       v{epoch}/__bucket={b}/*.parquet -- touched buckets of that epoch
+      stats_v{epoch}.json             -- row counts of those buckets
       manifest_v{epoch}.json          -- {"bucket": epoch_that_wrote_it}
       _LATEST                         -- name of the committed manifest
 
@@ -45,6 +45,8 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from ..lineage import cut
+from .commit import atomic_write, commit_pointer, read_pointer
+from .upsert import _visible
 
 BUCKET_COL = "__bucket"
 
@@ -109,23 +111,24 @@ def _read_buckets(spark: SparkSession, paths: list[str]) -> DataFrame:
     return spark.read.option("mergeSchema", "true").parquet(*paths)
 
 
-def _atomic_write(path: str, content: str) -> None:
-    """Crash-atomic small-file write: sibling .tmp + os.replace (POSIX
-    rename atomicity). Readers never observe a partial file."""
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(content)
-    os.replace(tmp, path)
+def _bucket_paths(state_dir: str, manifest: dict[int, int]) -> list[str]:
+    """The bucket dirs a bucket -> epoch mapping references."""
+    return [
+        os.path.join(state_dir, f"v{e}", f"{BUCKET_COL}={b}")
+        for b, e in manifest.items()
+    ]
 
 
-def read_latest_pointer(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read the parquet artifact the ``_LATEST`` pointer names — the
-    shared reader for every atomic-pointer snapshot tier (corpus/ANN/
-    shards refresh, vocab refresh; r11 ADVICE: one copy, not four).
-    The pointer content is a path RELATIVE to ``out_dir`` (epoch dir or
-    manifest name), committed by ``_atomic_write``."""
-    with open(os.path.join(out_dir, "_LATEST")) as f:
-        return spark.read.parquet(os.path.join(out_dir, f.read().strip()))
+def _written_parts(vdir: str, col: str = BUCKET_COL) -> set[int]:
+    """The partition values a write under ``vdir`` produced: the ground
+    truth for what an epoch may commit (the dynamic-partition write
+    creates no dir for an empty partition)."""
+    if not os.path.isdir(vdir):
+        return set()
+    return {
+        int(d.split("=", 1)[1])
+        for d in os.listdir(vdir) if d.startswith(f"{col}=")
+    }
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -157,56 +160,83 @@ def _same_manifest(a: str, b: str) -> bool:
         return a == b
 
 
-def _commit_manifest(state_dir: str, epoch: int, content: str) -> None:
-    """Epoch-manifest commit with a split-brain guard: if this epoch's
-    manifest already exists with a DIFFERENT mapping, refuse loudly
-    (Delta/Iceberg solve the same race with conditional commits; on a
-    plain filesystem, mapping equality of the deterministic manifest is
-    the equivalent check — replays rebuild the same mapping by
-    construction, divergent writers do not)."""
-    mf_path = os.path.join(state_dir, f"manifest_v{epoch}.json")
-    if os.path.exists(mf_path):
-        with open(mf_path) as f:
+def _manifest_name(epoch: int) -> str:
+    return f"manifest_v{epoch}.json"
+
+
+def _check_manifest(state_dir: str, epoch: int, content: str) -> None:
+    """Split-brain guard: if this epoch's manifest already exists with a
+    DIFFERENT mapping, refuse loudly (Delta/Iceberg solve the same race
+    with conditional commits; on a plain filesystem, mapping equality of
+    the deterministic manifest is the equivalent check — replays rebuild
+    the same mapping by construction, divergent writers do not)."""
+    try:
+        with open(os.path.join(state_dir, _manifest_name(epoch))) as f:
             existing = f.read()
-        if not _same_manifest(existing, content):
-            raise ConcurrentCommitError(
-                f"epoch {epoch} already has a committed manifest with "
-                f"different content in {state_dir} — concurrent writer "
-                "detected; refusing to overwrite a diverged history"
-            )
-    _atomic_write(mf_path, content)
+    except FileNotFoundError:
+        return
+    if not _same_manifest(existing, content):
+        raise ConcurrentCommitError(
+            f"epoch {epoch} already has a committed manifest with "
+            f"different content in {state_dir} — concurrent writer "
+            "detected; refusing to overwrite a diverged history"
+        )
+
+
+def _commit_manifest(state_dir: str, epoch: int, content: str) -> None:
+    """The commit tail after data and stats: the epoch's manifest (guarded
+    by ``_check_manifest``), then the pointer."""
+    _check_manifest(state_dir, epoch, content)
+    atomic_write(os.path.join(state_dir, _manifest_name(epoch)), content)
+    commit_pointer(state_dir, _manifest_name(epoch))
+
+
+def _load_manifest(state_dir: str, name: str) -> dict[int, int]:
+    with open(os.path.join(state_dir, name)) as f:
+        return {int(k): int(v) for k, v in json.load(f).items()}
 
 
 def _read_manifest(state_dir: str) -> dict[int, int] | None:
-    marker = os.path.join(state_dir, "_LATEST")
-    if not os.path.exists(marker):
-        return None
-    with open(marker) as f:
-        name = f.read().strip()
-    with open(os.path.join(state_dir, name)) as f:
-        return {int(k): int(v) for k, v in json.load(f).items()}
+    name = read_pointer(state_dir)
+    return None if name is None else _load_manifest(state_dir, name)
+
+
+def _committed_manifests(state_dir: str) -> list[int]:
+    """Epochs of the committed manifests, ascending: those at or before
+    the one the pointer names. A newer manifest is in flight (a writer
+    between its manifest and pointer writes, or one that crashed there)
+    and is neither read nor reclaimed."""
+    name = read_pointer(state_dir)
+    if name is None:
+        return []
+    prefix, suffix = "manifest_v", ".json"
+    committed = int(name[len(prefix):-len(suffix)])
+    return sorted(
+        e for e in (
+            int(n[len(prefix):-len(suffix)]) for n in os.listdir(state_dir)
+            if n.startswith(prefix) and n.endswith(suffix)
+        ) if e <= committed
+    )
 
 
 def _write_stats(state_dir: str, epoch: int, vdir: str) -> dict[int, int]:
     """Per-bucket PHYSICAL row counts (tombstones included) of the
     buckets written under ``epoch`` → ``stats_v{epoch}.json``, committed
-    by atomic rename BEFORE the manifest (commit order: data → stats →
-    manifest → _LATEST, so a committed manifest always has its stats).
+    BEFORE the manifest (step 2 of the protocol in ``commit.py``).
     This is the table-format statistics idea (Iceberg/Delta manifests
     carry row counts): planning questions — total state size, bucket
     skew, when to grow ``n_buckets`` via ``compact_state`` — are
     answered from KB-scale JSON, never a state scan. The counts are the
     ``num_rows`` footer fields of the files this epoch just wrote: no
     Spark job, and no data page is read."""
-    counts: dict[int, int] = {}
-    if os.path.isdir(vdir):
-        for d in os.listdir(vdir):
-            if d.startswith(f"{BUCKET_COL}="):
-                counts[int(d.split("=", 1)[1])] = sum(
-                    pq.read_metadata(f).num_rows
-                    for f in _parquet_files(os.path.join(vdir, d))
-                )
-    _atomic_write(
+    counts = {
+        b: sum(
+            pq.read_metadata(f).num_rows
+            for f in _parquet_files(os.path.join(vdir, f"{BUCKET_COL}={b}"))
+        )
+        for b in _written_parts(vdir)
+    }
+    atomic_write(
         os.path.join(state_dir, f"stats_v{epoch}.json"),
         json.dumps({str(k): v for k, v in counts.items()}, sort_keys=True),
     )
@@ -245,7 +275,7 @@ def pinned_bucket_count(
     nb = requested if requested is not None else max(
         floor, -(-int(n_keys()) // target)
     )
-    _atomic_write(meta_path, json.dumps({"n_buckets": nb}))
+    atomic_write(meta_path, json.dumps({"n_buckets": nb}))
     return nb
 
 
@@ -271,7 +301,7 @@ def bucket_row_counts(spark: SparkSession, state_dir: str) -> dict[int, int]:
                 out[b] = stats[b]
             else:  # legacy epoch without stats: count that bucket once
                 out[b] = spark.read.parquet(
-                    os.path.join(state_dir, f"v{e}", f"{BUCKET_COL}={b}")
+                    *_bucket_paths(state_dir, {b: e})
                 ).count()
     return out
 
@@ -310,7 +340,6 @@ def apply_changes_partitioned(
     keys: list[str],
     position: list[str],
     n_buckets: int = 16,
-    op_col: str = "__op",
     touched: list[int] | None = None,
 ) -> None:
     """Merge one micro-batch, rewriting only touched buckets. Replaying
@@ -345,23 +374,13 @@ def apply_changes_partitioned(
     # committed bucket dirs from our overwrite; refusing only at commit
     # time would be too late. A replay of the same batch rebuilds the
     # same mapping and passes (idempotency preserved; comparison is on
-    # the parsed mapping, serialization is canonical sort_keys).
-    expected_manifest = _manifest_dumps(
-        {**manifest, **{b: epoch for b in touched}}
+    # the parsed mapping, serialization is canonical sort_keys). The
+    # commit re-checks, in case a racer lands between here and there.
+    new_manifest = _manifest_dumps({**manifest, **{b: epoch for b in touched}})
+    _check_manifest(state_dir, epoch, new_manifest)
+    current_paths = _bucket_paths(
+        state_dir, {b: manifest[b] for b in touched if b in manifest}
     )
-    mf_path = os.path.join(state_dir, f"manifest_v{epoch}.json")
-    if os.path.exists(mf_path):
-        with open(mf_path) as f:
-            if not _same_manifest(f.read(), expected_manifest):
-                raise ConcurrentCommitError(
-                    f"epoch {epoch} already has a committed manifest with "
-                    f"different content in {state_dir} — concurrent "
-                    "writer detected; refusing before overwriting its data"
-                )
-    current_paths = [
-        os.path.join(state_dir, f"v{manifest[b]}", f"{BUCKET_COL}={b}")
-        for b in touched if b in manifest
-    ]
     merged = batch
     if current_paths:
         # allowMissingColumns: schema-widened batches (mid-stream DDL
@@ -402,32 +421,16 @@ def apply_changes_partitioned(
         # touched bucket must have been physically written (the fold
         # keeps ≥1 row per key — tombstones are retained rows — so an
         # exact list always matches) and nothing outside it may exist
-        written = {
-            int(d.split("=", 1)[1])
-            for d in os.listdir(vdir)
-            if d.startswith(f"{BUCKET_COL}=")
-        } if os.path.isdir(vdir) else set()
+        written = _written_parts(vdir)
         if written != set(touched):
             raise ValueError(
                 f"caller-provided touched buckets {sorted(touched)} do "
                 f"not match written partition dirs {sorted(written)} in "
                 f"{vdir} — refusing to commit a lying manifest"
             )
+    # stats, manifest, pointer: the commit order of ``commit.py``
     _write_stats(state_dir, epoch, vdir)
-    manifest.update({b: epoch for b in touched})
-    # Both commit files land by ATOMIC RENAME (write sibling .tmp, then
-    # os.replace): a truncate-in-place `open(..., "w")` can leave a torn
-    # manifest or — far worse — a torn _LATEST pointer if the writer
-    # dies mid-write, bricking every reader. With rename-commit, a crash
-    # at ANY byte leaves either the old file or the new one, never a
-    # partial (fault-injection-tested in tests/test_upsert.py). The
-    # manifest commit additionally refuses split-brain (same epoch,
-    # different content) — pre-checked above, re-checked here in case a
-    # racer landed between the check and this commit.
-    mf = f"manifest_v{epoch}.json"
-    assert _manifest_dumps(manifest) == expected_manifest
-    _commit_manifest(state_dir, epoch, expected_manifest)
-    _atomic_write(os.path.join(state_dir, "_LATEST"), mf)  # commit point
+    _commit_manifest(state_dir, epoch, new_manifest)
 
 
 def read_state_partitioned(
@@ -438,14 +441,8 @@ def read_state_partitioned(
     manifest = _read_manifest(state_dir)
     if not manifest:
         return None
-    paths = [
-        os.path.join(state_dir, f"v{v}", f"{BUCKET_COL}={b}")
-        for b, v in manifest.items()
-    ]
-    df = _read_buckets(spark, paths)
-    if not include_tombstones:
-        df = df.filter(F.col(op_col) != "d").drop(op_col)
-    return df
+    df = _read_buckets(spark, _bucket_paths(state_dir, manifest))
+    return _visible(df, include_tombstones, op_col)
 
 
 def read_state_partitioned_at(
@@ -454,7 +451,7 @@ def read_state_partitioned_at(
 ) -> DataFrame | None:
     """Point-in-time read of the bucket-partitioned state: resolve the
     largest COMMITTED manifest <= ``epoch`` (a manifest counts only if
-    it is, or precedes, the one ``_LATEST`` points at — a crash between
+    it is, or precedes, the one the pointer names — a crash between
     manifest write and pointer update must stay invisible, mirroring
     upsert.list_versions) and assemble state from its bucket → epoch
     references. This is the manifest-pick analog of upsert's full-copy
@@ -466,24 +463,16 @@ def read_state_partitioned_at(
     references bucket dirs that vacuum already reclaimed ("that history
     was GC'd" must be loud, not an empty result). Returns None only
     when no manifest was ever committed."""
-    marker = os.path.join(state_dir, "_LATEST")
-    if not os.path.exists(marker):
-        return None
-    with open(marker) as f:
-        committed_name = f.read().strip()
-    committed_epoch = int(committed_name.split("_v")[1].split(".")[0])
-    manifests = sorted(
-        int(n.split("_v")[1].split(".")[0])
-        for n in os.listdir(state_dir)
-        if n.startswith("manifest_v") and n.endswith(".json")
-    )
-    manifests = [m for m in manifests if m <= committed_epoch]
+    manifests = _committed_manifests(state_dir)
     if not manifests:
-        # _LATEST exists but its manifest is gone: corrupted/hand-pruned
-        # state — loud, never a silent empty read
+        pointer = read_pointer(state_dir)
+        if pointer is None:
+            return None
+        # the pointer exists but its manifest is gone: corrupted/hand-
+        # pruned state — loud, never a silent empty read
         raise ValueError(
-            f"{state_dir} has a _LATEST pointer but no committed "
-            f"manifest files (pointer: {committed_name})"
+            f"{state_dir} has a commit pointer but no committed "
+            f"manifest files (pointer: {pointer})"
         )
     eligible = [m for m in manifests if m <= epoch]
     if not eligible:
@@ -491,14 +480,9 @@ def read_state_partitioned_at(
             f"epoch {epoch} predates the vacuum horizon of {state_dir}; "
             f"oldest retained manifest is v{manifests[0]}"
         )
-    with open(
-        os.path.join(state_dir, f"manifest_v{eligible[-1]}.json")
-    ) as f:
-        manifest = {int(k): int(v) for k, v in json.load(f).items()}
-    paths = [
-        os.path.join(state_dir, f"v{v}", f"{BUCKET_COL}={b}")
-        for b, v in manifest.items()
-    ]
+    paths = _bucket_paths(
+        state_dir, _load_manifest(state_dir, _manifest_name(eligible[-1]))
+    )
     missing = [p for p in paths if not os.path.isdir(p)]
     if missing:
         raise ValueError(
@@ -506,10 +490,7 @@ def read_state_partitioned_at(
             f"v{eligible[-1]} references reclaimed buckets "
             f"(e.g. {missing[0]})"
         )
-    df = _read_buckets(spark, paths)
-    if not include_tombstones:
-        df = df.filter(F.col(op_col) != "d").drop(op_col)
-    return df
+    return _visible(_read_buckets(spark, paths), include_tombstones, op_col)
 
 
 def start_partitioned_upsert_stream(
@@ -541,54 +522,46 @@ def vacuum_partitioned(state_dir: str, keep_last: int = 1) -> list[str]:
     at an OLD epoch dir, so reachability is the union of bucket->epoch
     references in the kept manifests — never just "delete old v dirs"
     (that would tear live state). Time-travel reads older than the kept
-    horizon stop working, by design. Returns removed paths."""
+    horizon stop working, by design. Nothing newer than the committed
+    manifest is touched: that epoch is in flight. Returns removed
+    paths."""
     import shutil
 
-    manifests = sorted(
-        (int(n.split("_v")[1].split(".")[0]), n)
-        for n in os.listdir(state_dir)
-        if n.startswith("manifest_v") and n.endswith(".json")
-    )
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
+    manifests = _committed_manifests(state_dir)
     if not manifests:
         return []
-    with open(os.path.join(state_dir, "_LATEST")) as f:
-        committed = f.read().strip()
-    # keep the committed manifest plus keep_last-1 predecessors
-    c_idx = [i for i, (_, n) in enumerate(manifests) if n == committed][0]
-    kept = manifests[max(0, c_idx - keep_last + 1): c_idx + 1]
+    newest = manifests[-1]
     live: set[tuple[int, int]] = set()
-    for _, name in kept:
-        with open(os.path.join(state_dir, name)) as f:
-            for b, v in json.load(f).items():
-                live.add((int(b), int(v)))
+    for e in manifests[-keep_last:]:
+        live.update(_load_manifest(state_dir, _manifest_name(e)).items())
     removed = []
-    kept_names = {n for _, n in kept}
-    for _, name in manifests:
-        if name not in kept_names:
-            os.remove(os.path.join(state_dir, name))
-            removed.append(name)
+    for e in manifests[:-keep_last]:
+        os.remove(os.path.join(state_dir, _manifest_name(e)))
+        removed.append(_manifest_name(e))
     # stats files share v-dir liveness: keep stats_v{e} while any kept
     # manifest still references epoch e, reclaim otherwise
     live_epochs = {v for (_, v) in live}
     for entry in os.listdir(state_dir):
         if entry.startswith("stats_v") and entry.endswith(".json"):
             e = int(entry[len("stats_v"):-len(".json")])
-            if e not in live_epochs:
+            if e <= newest and e not in live_epochs:
                 os.remove(os.path.join(state_dir, entry))
                 removed.append(entry)
     for entry in os.listdir(state_dir):
         if not (entry.startswith("v") and entry[1:].isdigit()):
             continue
         epoch = int(entry[1:])
+        if epoch > newest:
+            continue
         vdir = os.path.join(state_dir, entry)
-        for bdir in os.listdir(vdir):
-            if not bdir.startswith(f"{BUCKET_COL}="):
-                continue
-            b = int(bdir.split("=")[1])
+        for b in sorted(_written_parts(vdir)):
             if (b, epoch) not in live:
+                bdir = f"{BUCKET_COL}={b}"
                 shutil.rmtree(os.path.join(vdir, bdir))
                 removed.append(os.path.join(entry, bdir))
-        if not any(n.startswith(f"{BUCKET_COL}=") for n in os.listdir(vdir)):
+        if not _written_parts(vdir):
             shutil.rmtree(vdir)
     return removed
 
@@ -635,11 +608,7 @@ def compact_state(
             f"epoch {committed} (writing into a live epoch would "
             "overwrite bucket dirs the compaction is reading)"
         )
-    paths = [
-        os.path.join(state_dir, f"v{v}", f"{BUCKET_COL}={b}")
-        for b, v in manifest.items()
-    ]
-    df = _read_buckets(spark, paths).withColumn(
+    df = _read_buckets(spark, _bucket_paths(state_dir, manifest)).withColumn(
         BUCKET_COL, _bucket(keys, n_buckets)
     )
     dropped = 0
@@ -660,23 +629,17 @@ def compact_state(
     # every subsequent read raise path-not-found; (2) compacting with a
     # different n_buckets re-buckets rows into NEW ids — keeping the old
     # ids both points reads at missing dirs and silently orphans the
-    # newly written buckets (data loss). Listing the partition dirs of
-    # the epoch just written is the ground truth for both.
-    new_manifest = {
-        int(d.split("=")[1]): epoch
-        for d in os.listdir(vdir)
-        if d.startswith(f"{BUCKET_COL}=")
-    } if os.path.isdir(vdir) else {}
+    # newly written buckets (data loss). The partition dirs of the epoch
+    # just written (the buckets its stats count) are the ground truth.
     counts = _write_stats(state_dir, epoch, vdir)
-    mf = f"manifest_v{epoch}.json"
-    # canonical serialization (sort_keys): new_manifest is rebuilt from
+    # canonical serialization (sort_keys): the buckets come from
     # os.listdir order here, so a crash-replay of this compaction must
     # not trip the split-brain guard on a mere key-order difference
-    _commit_manifest(state_dir, epoch, _manifest_dumps(new_manifest))
-    _atomic_write(os.path.join(state_dir, "_LATEST"), mf)
-    rows = sum(counts.values())
+    _commit_manifest(
+        state_dir, epoch, _manifest_dumps({b: epoch for b in counts})
+    )
     return {
-        "buckets": len(new_manifest),
-        "rows": rows,
+        "buckets": len(counts),
+        "rows": sum(counts.values()),
         "dropped_tombstones": dropped,
     }

@@ -5,11 +5,11 @@ in this environment).
 
 Versioned-directory protocol: each micro-batch writes a full new state
 version ``state_dir/v{epoch}`` (read-modify-write of parquet in place is
-unsafe — Spark reads lazily), then updates ``_LATEST``. At 100 TB you
-would partition state by key range and rewrite only partitions touched
-by the batch (or use a table format with row-level MERGE); the operator
-shape — dedupe batch, anti-join current state, union, write — is
-identical.
+unsafe — Spark reads lazily), then commits it by the protocol in
+``commit.py``. At 100 TB you would partition state by key range and
+rewrite only partitions touched by the batch (or use a table format with
+row-level MERGE); the operator shape — dedupe batch, anti-join current
+state, union, write — is identical.
 """
 
 from __future__ import annotations
@@ -20,26 +20,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-
-def _commit_pointer(state_dir: str, version: str) -> None:
-    """Crash-atomic _LATEST update: sibling .tmp + os.replace. A
-    truncate-in-place write could leave a torn pointer that bricks every
-    reader; rename-commit leaves either the old pointer or the new one,
-    never a partial."""
-    tmp = os.path.join(state_dir, "_LATEST.tmp")
-    with open(tmp, "w") as f:
-        f.write(version)
-    os.replace(tmp, os.path.join(state_dir, "_LATEST"))
+from .commit import commit_pointer, read_pointer
 
 
 def _latest_path(state_dir: str) -> str | None:
-    marker = os.path.join(state_dir, "_LATEST")
-    if os.path.exists(marker):
-        with open(marker) as f:
-            v = f.read().strip()
-        p = os.path.join(state_dir, v)
-        return p if os.path.exists(p) else None
-    return None
+    v = read_pointer(state_dir)
+    if v is None:
+        return None
+    p = os.path.join(state_dir, v)
+    return p if os.path.exists(p) else None
+
+
+def _visible(
+    df: DataFrame, include_tombstones: bool, op_col: str
+) -> DataFrame:
+    """Tombstones (op 'd') stay in storage; readers drop them, and the op
+    column with them, unless asked to keep them."""
+    if include_tombstones:
+        return df
+    return df.filter(F.col(op_col) != "d").drop(op_col)
 
 
 def read_state(
@@ -52,27 +51,22 @@ def read_state(
     p = _latest_path(state_dir)
     if not p:
         return None
-    df = spark.read.parquet(p)
-    if not include_tombstones:
-        df = df.filter(F.col(op_col) != "d").drop(op_col)
-    return df
+    return _visible(spark.read.parquet(p), include_tombstones, op_col)
 
 
 def list_versions(state_dir: str) -> list[int]:
     """Committed state epochs, ascending. A ``v{n}`` directory counts
-    only if n <= the ``_LATEST`` marker — a crash between the version
-    write and the marker update leaves an orphan directory that must not
-    be served (the protocol's commit point IS the marker)."""
-    marker = os.path.join(state_dir, "_LATEST")
-    if not os.path.exists(marker):
+    only if n <= the committed pointer — a crash between the version
+    write and the pointer update leaves an orphan directory that must not
+    be served (the protocol's commit point IS the pointer)."""
+    name = read_pointer(state_dir)
+    if name is None:
         return []
-    with open(marker) as f:
-        committed = int(f.read().strip().lstrip("v"))
-    out = []
-    for name in os.listdir(state_dir):
-        if name.startswith("v") and name[1:].isdigit() and int(name[1:]) <= committed:
-            out.append(int(name[1:]))
-    return sorted(out)
+    committed = int(name.lstrip("v"))
+    return sorted(
+        int(n[1:]) for n in os.listdir(state_dir)
+        if n.startswith("v") and n[1:].isdigit() and int(n[1:]) <= committed
+    )
 
 
 def read_state_at(
@@ -101,9 +95,7 @@ def read_state_at(
             )
         return None
     df = spark.read.parquet(os.path.join(state_dir, f"v{versions[-1]}"))
-    if not include_tombstones:
-        df = df.filter(F.col(op_col) != "d").drop(op_col)
-    return df
+    return _visible(df, include_tombstones, op_col)
 
 
 def apply_changes_batch(
@@ -139,7 +131,7 @@ def apply_changes_batch(
     )
     out = os.path.join(state_dir, f"v{epoch}")
     new_state.write.mode("overwrite").parquet(out)
-    _commit_pointer(state_dir, f"v{epoch}")
+    commit_pointer(state_dir, f"v{epoch}")
 
 
 def start_upsert_stream(
@@ -204,7 +196,7 @@ def apply_scd2_batch(
         new_hist = untouched.unionByName(rebuilt, allowMissingColumns=True)
     out = os.path.join(state_dir, f"v{epoch}")
     new_hist.write.mode("overwrite").parquet(out)
-    _commit_pointer(state_dir, f"v{epoch}")
+    commit_pointer(state_dir, f"v{epoch}")
 
 
 def start_scd2_stream(
@@ -236,20 +228,14 @@ def vacuum_versions(state_dir: str, keep_last: int = 2) -> list[str]:
     the partitioned layout's per-bucket refs — age-based retention is
     safe). Keeps the newest `keep_last` committed versions; time-travel
     (read_state_at) reaches only what's kept. Never touches versions
-    newer than _LATEST (in-flight writes). Returns removed dirs."""
+    newer than the committed pointer (in-flight writes). Returns removed
+    dirs."""
     import shutil
 
-    marker = os.path.join(state_dir, "_LATEST")
-    if not os.path.exists(marker):
-        return []
-    with open(marker) as f:
-        committed = int(f.read().strip().lstrip("v"))
-    versions = sorted(
-        int(n[1:]) for n in os.listdir(state_dir)
-        if n.startswith("v") and n[1:].isdigit() and int(n[1:]) <= committed
-    )
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     removed = []
-    for v in versions[:-keep_last] if keep_last > 0 else versions:
+    for v in list_versions(state_dir)[:-keep_last]:
         shutil.rmtree(os.path.join(state_dir, f"v{v}"))
         removed.append(f"v{v}")
     return removed

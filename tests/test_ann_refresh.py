@@ -18,7 +18,6 @@ from debezium_incubator_spark.cdc.ann_refresh import (
     embeddings_change_log,
     embeddings_envelopes,
     read_incremental_index,
-    read_latest_index,
     route_to_cells,
     semdedup_survivors,
     start_ann_refresh_incremental_stream,
@@ -30,6 +29,7 @@ from debezium_incubator_spark.llm.similarity import (
     IVF_AUDIT_DIR,
     _ensure_ivf_index,
 )
+from debezium_incubator_spark.streaming.commit import read_latest
 
 from .conftest import SF_SMOKE
 
@@ -148,7 +148,7 @@ def test_stream_equals_batch_across_restart(spark, tmp_path):
     q.awaitTermination(300)
     mid = {
         (r["vec_id"], r["cell"])
-        for r in read_latest_index(spark, out_dir).collect()
+        for r in read_latest(spark, out_dir).collect()
     }
     assert mid, "prefix index is empty"
 
@@ -165,7 +165,7 @@ def test_stream_equals_batch_across_restart(spark, tmp_path):
     }
     streamed = {
         (r["vec_id"], r["cell"])
-        for r in read_latest_index(spark, out_dir)
+        for r in read_latest(spark, out_dir)
         .select("vec_id", "cell").collect()
     }
     assert streamed == batch
@@ -403,12 +403,12 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
     handle(wire, 0)
     first = sorted(
         (r["vec_id"], r["cell"])
-        for r in read_latest_index(spark, out_dir).collect()
+        for r in read_latest(spark, out_dir).collect()
     )
     handle(wire, 0)  # replay
     again = sorted(
         (r["vec_id"], r["cell"])
-        for r in read_latest_index(spark, out_dir).collect()
+        for r in read_latest(spark, out_dir).collect()
     )
     assert first == again and first
 
@@ -478,9 +478,7 @@ def test_stale_touched_set_refused(spark, tmp_path):
 
     import pytest
 
-    from debezium_incubator_spark.streaming.partitioned_state import (
-        _atomic_write,
-    )
+    from debezium_incubator_spark.streaming.commit import atomic_write
 
     idx = _ensure_ivf_index(spark, SF_SMOKE)
     cents_dir = os.path.join(idx, "centroids")
@@ -490,7 +488,7 @@ def test_stale_touched_set_refused(spark, tmp_path):
     handle = ann_refresh_incremental_foreach_batch(cents_dir, index_dir)
     handle(embeddings_envelopes(log.filter(F.col("__op") == "c")), 0)
     # forge a stale epoch-1 touched set that misses every real cell
-    _atomic_write(
+    atomic_write(
         os.path.join(index_dir, "touched_v1.json"), json.dumps([99999])
     )
     with pytest.raises(ValueError, match="not a replay"):

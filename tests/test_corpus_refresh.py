@@ -17,11 +17,11 @@ from debezium_incubator_spark.cdc.corpus_refresh import (
     dedup_keepers,
     documents_change_log,
     documents_envelopes,
-    read_latest_corpus,
     start_corpus_refresh_stream,
     unwrap_documents,
 )
 from debezium_incubator_spark.cdc.materialize import materialize_latest
+from debezium_incubator_spark.streaming.commit import read_latest
 
 from .conftest import SF_SMOKE
 
@@ -108,7 +108,7 @@ def test_stream_equals_batch_across_restart(spark, tmp_path):
     stage_file(0)
     q = start_corpus_refresh_stream(spark, stage, state_dir, out_dir, ckpt)
     q.awaitTermination(300)
-    mid = {r["doc_id"] for r in read_latest_corpus(spark, out_dir).collect()}
+    mid = {r["doc_id"] for r in read_latest(spark, out_dir).collect()}
     assert mid, "prefix corpus is empty"
 
     # deliver the rest, restart on the same checkpoint
@@ -119,7 +119,7 @@ def test_stream_equals_batch_across_restart(spark, tmp_path):
 
     batch = cdc_corpus_refresh(spark, SF_SMOKE).collect()
     streamed = sorted(
-        read_latest_corpus(spark, out_dir).collect(),
+        read_latest(spark, out_dir).collect(),
         key=lambda r: r["doc_id"],
     )
     assert [tuple(r) for r in streamed] == [tuple(r) for r in batch]
@@ -141,10 +141,10 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
     handle = corpus_refresh_foreach_batch(state_dir, out_dir, n_buckets=4)
     handle(wire, 0)
     first = sorted(
-        tuple(r) for r in read_latest_corpus(spark, out_dir).collect()
+        tuple(r) for r in read_latest(spark, out_dir).collect()
     )
     handle(wire, 0)  # replay
     again = sorted(
-        tuple(r) for r in read_latest_corpus(spark, out_dir).collect()
+        tuple(r) for r in read_latest(spark, out_dir).collect()
     )
     assert first == again

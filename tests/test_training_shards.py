@@ -24,10 +24,10 @@ from debezium_incubator_spark.cdc.training_shards import (
     SHARD_PACK_BUDGET,
     SHARD_SEED,
     cdc_training_shards,
-    read_latest_shards,
     start_training_shards_stream,
     training_shards_foreach_batch,
 )
+from debezium_incubator_spark.streaming.commit import read_latest
 
 from .conftest import SF_SMOKE
 
@@ -114,7 +114,7 @@ def test_stream_equals_batch_across_restart(spark, tmp_path):
     )
     q.awaitTermination(300)
     mid = sorted(
-        tuple(r) for r in read_latest_shards(spark, out_dir).collect()
+        tuple(r) for r in read_latest(spark, out_dir).collect()
     )
     assert mid, "prefix snapshot is empty"
 
@@ -129,7 +129,7 @@ def test_stream_equals_batch_across_restart(spark, tmp_path):
         tuple(r) for r in cdc_training_shards(spark, SF_SMOKE).collect()
     )
     streamed = sorted(
-        tuple(r) for r in read_latest_shards(spark, out_dir).collect()
+        tuple(r) for r in read_latest(spark, out_dir).collect()
     )
     assert streamed == batch
     assert mid != batch  # the prefix saw a pre-delete world
@@ -145,11 +145,11 @@ def test_epoch_replay_is_idempotent(spark, tmp_path):
     handle = training_shards_foreach_batch(state_dir, out_dir, n_buckets=4)
     handle(wire, 0)
     first = sorted(
-        tuple(r) for r in read_latest_shards(spark, out_dir).collect()
+        tuple(r) for r in read_latest(spark, out_dir).collect()
     )
     handle(wire, 0)  # replay
     again = sorted(
-        tuple(r) for r in read_latest_shards(spark, out_dir).collect()
+        tuple(r) for r in read_latest(spark, out_dir).collect()
     )
     assert first == again and first
 
@@ -199,7 +199,6 @@ def test_incremental_equals_pinned_recompute_every_epoch(spark, tmp_path):
     chain (the pinned LM trains on exactly the corpus the capstone's
     self-trained LM sees at that point)."""
     from debezium_incubator_spark.cdc.training_shards import (
-        read_latest_shards,
         training_shards,
         training_shards_incremental_foreach_batch,
     )
@@ -217,7 +216,7 @@ def test_incremental_equals_pinned_recompute_every_epoch(spark, tmp_path):
         handle(wire, i)
         got = sorted(
             tuple(r)
-            for r in read_latest_shards(spark, out_dir).collect()
+            for r in read_latest(spark, out_dir).collect()
         )
         assert got == _pinned_truth(spark, slices[: i + 1], lm_dir), (
             f"epoch {i}: incremental shards diverge from pinned "
@@ -280,7 +279,6 @@ def test_incremental_replay_keeps_metrics_and_snapshot(spark, tmp_path):
     against its own committed rows would overwrite the dir empty and
     lose the metrics) and the snapshot is unchanged."""
     from debezium_incubator_spark.cdc.training_shards import (
-        read_latest_shards,
         training_shards_incremental_foreach_batch,
     )
 
@@ -295,7 +293,7 @@ def test_incremental_replay_keeps_metrics_and_snapshot(spark, tmp_path):
     handle(slices[0], 0)
     handle(slices[1], 1)
     first = sorted(
-        tuple(r) for r in read_latest_shards(spark, out_dir).collect()
+        tuple(r) for r in read_latest(spark, out_dir).collect()
     )
     m1_first = sorted(
         tuple(r)
@@ -305,7 +303,7 @@ def test_incremental_replay_keeps_metrics_and_snapshot(spark, tmp_path):
     )
     handle(slices[1], 1)  # replay
     again = sorted(
-        tuple(r) for r in read_latest_shards(spark, out_dir).collect()
+        tuple(r) for r in read_latest(spark, out_dir).collect()
     )
     m1_again = sorted(
         tuple(r)
@@ -323,7 +321,6 @@ def test_incremental_stream_restart_converges(spark, tmp_path):
     import glob
 
     from debezium_incubator_spark.cdc.training_shards import (
-        read_latest_shards,
         start_training_shards_incremental_stream,
     )
 
@@ -353,7 +350,7 @@ def test_incremental_stream_restart_converges(spark, tmp_path):
     )
     q.awaitTermination(300)
     mid = sorted(
-        tuple(r) for r in read_latest_shards(spark, out_dir).collect()
+        tuple(r) for r in read_latest(spark, out_dir).collect()
     )
     assert mid
     stage_file(1)
@@ -363,7 +360,7 @@ def test_incremental_stream_restart_converges(spark, tmp_path):
     )
     q2.awaitTermination(300)
     final = sorted(
-        tuple(r) for r in read_latest_shards(spark, out_dir).collect()
+        tuple(r) for r in read_latest(spark, out_dir).collect()
     )
     assert final == _pinned_truth(
         spark, slices, str(root / "lm" / "pairs")

@@ -10,11 +10,11 @@ import os
 from debezium_incubator_spark.catalog import table
 from debezium_incubator_spark.llm.bpe import bpe_token_count
 from debezium_incubator_spark.llm.bpe_train import (
-    read_latest,
     start_vocab_refresh_stream,
     train_bpe_merges,
     vocab_refresh_foreach_batch,
 )
+from debezium_incubator_spark.streaming.commit import read_latest
 
 from .conftest import SF_SMOKE
 

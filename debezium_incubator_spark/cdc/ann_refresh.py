@@ -85,6 +85,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
 from ..catalog import table
+from ..lineage import scratch_dir
 from ..registry import register
 from ..llm.similarity import (
     IVF_AUDIT_DIR,
@@ -914,21 +915,8 @@ def start_ann_refresh_stream(
 # full-recompute oracle (`_ORACLE` — the differential the retired batch
 # form carried). Per-key delivery order is position-monotone by
 # construction: every key's create (pos·10+1) precedes its update
-# (·10+2) precedes its delete (·10+3). Scratch tiers live at a fixed
-# /tmp path, wiped per invocation, atexit-cleaned.
-
-ANN_INCR_DIR = "/tmp/dis_ann_incr_current"
-
-
-def _cleanup_ann_incr_dir() -> None:
-    import shutil
-
-    shutil.rmtree(ANN_INCR_DIR, ignore_errors=True)
-
-
-import atexit  # noqa: E402
-
-atexit.register(_cleanup_ann_incr_dir)
+# (·10+2) precedes its delete (·10+3). The tiers of each invocation live
+# in a fresh ``lineage.scratch_dir``.
 
 
 @register("ann_refresh_incremental", oracle=_ORACLE)
@@ -946,21 +934,19 @@ def ann_refresh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoping + persistence, members/survivors rewrites, emptied-cell
     manifest rule, lookup commit ordering — changes cost, never
     answers."""
-    import shutil
-
     idx = _ensure_ivf_index(spark, sf_dir)
     cents_dir = os.path.join(idx, "centroids")
     emb = table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     log = embeddings_change_log(emb)
-    shutil.rmtree(ANN_INCR_DIR, ignore_errors=True)
-    handle = ann_refresh_incremental_foreach_batch(cents_dir, ANN_INCR_DIR)
+    index_dir = scratch_dir("dis_ann_incr_")
+    handle = ann_refresh_incremental_foreach_batch(cents_dir, index_dir)
     for epoch, op in enumerate(("c", "u", "d")):
         handle(
             embeddings_envelopes(log.filter(F.col("__op") == op)), epoch
         )
-    surv = read_incremental_index(spark, ANN_INCR_DIR)
+    surv = read_incremental_index(spark, index_dir)
     return surv.select(
         "vec_id", F.col("cell").cast("bigint").alias("cell")
     ).orderBy("vec_id")

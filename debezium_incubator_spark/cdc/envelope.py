@@ -412,16 +412,6 @@ def connector_source_schema(connector: str) -> T.StructType:
     )
 
 
-def position_order(df: DataFrame, connector: str,
-                   source_col: str = "source") -> list[str]:
-    """Flatten the connector's position fields out of the source struct
-    and return the ordering column list for the state folds."""
-    cols = POSITION_COLUMNS[connector]
-    for c in cols:
-        df = df.withColumn(f"__pos_{c}", F.col(f"{source_col}.{c}"))
-    return [f"__pos_{c}" for c in cols]
-
-
 def attach_transaction_metadata(env: DataFrame,
                                 tx_id) -> DataFrame:
     """``provide.transaction.metadata`` (public Debezium): when

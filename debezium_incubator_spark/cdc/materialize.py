@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..catalog import table
+from ..lineage import scratch_dir
 from ..registry import register
 from .envelope import EVENT_ROW_SCHEMA, OP_CASE, parse_envelope, to_envelope, unwrap
 
@@ -467,8 +468,6 @@ def cdc_materialize_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     split at mid-month into two micro-batches, applied through the
     bucket-partitioned state (epoch 1 rewrites only touched buckets),
     and the assembled state must hash-match the monolithic fold."""
-    import tempfile
-
     from ..streaming.partitioned_state import (
         apply_changes_partitioned,
         read_state_partitioned,
@@ -477,7 +476,7 @@ def cdc_materialize_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").withColumn("__op", F.expr(OP_CASE))
     ev = ev.select("user_id", "event_id", "value", "ts", "__op")
     cut = F.lit("2024-01-15").cast("timestamp_ntz")
-    state = tempfile.mkdtemp(prefix="cdc_part_state_")  # lazily read below
+    state = scratch_dir("cdc_part_state_")  # lazily read below
     apply_changes_partitioned(
         spark, ev.filter(F.col("ts") < cut), 0, state,
         keys=["user_id"], position=["ts", "event_id"], n_buckets=8,

@@ -504,22 +504,8 @@ def make_execute_snapshot_handler(
 # chunks, bookmark commits, an actual mid-run pause + resume — under the
 # same differential gate: an interrupted-and-resumed chunked snapshot,
 # folded with the live stream, must hash-equal plain latest-state from
-# the log. Same fixed-/tmp-artifact pattern as the IVF index audit
-# (llm/similarity.py IVF_AUDIT_DIR): rebuilt per invocation, removed at
-# interpreter exit.
-
-LIFECYCLE_AUDIT_DIR = "/tmp/dis_snapshot_lifecycle_current"
-
-
-def _cleanup_lifecycle_audit_dir() -> None:
-    import shutil
-
-    shutil.rmtree(LIFECYCLE_AUDIT_DIR, ignore_errors=True)
-
-
-import atexit  # noqa: E402
-
-atexit.register(_cleanup_lifecycle_audit_dir)
+# the log. Each invocation stages its chunks in a fresh
+# ``lineage.scratch_dir``.
 
 from ..registry import register  # noqa: E402
 
@@ -551,11 +537,9 @@ def cdc_lifecycle_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization, bookmark resume, op='r' stamping at each chunk's
     low watermark — changes delivery, never answers. Deterministic:
     fixed chunk count, narrow (H-5, H] brackets, pause point by chunk
-    index; artifacts at a fixed /tmp path, rebuilt per invocation,
-    atexit-cleaned."""
-    import shutil
-
+    index."""
     from ..catalog import table
+    from ..lineage import scratch_dir
     from .envelope import OP_CASE
     from .incremental_snapshot import chunk_bounds
     from .materialize import materialize_latest
@@ -578,10 +562,9 @@ def cdc_lifecycle_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             ch.filter(F.col("pos") <= pos), ["user_id"], ["pos"]
         ).select("user_id", "value")
 
-    shutil.rmtree(LIFECYCLE_AUDIT_DIR, ignore_errors=True)
     runner = ChunkedSnapshotRunner(
         spark, snapshot_at, ch, "user_id", "pos", bounds, watermarks,
-        LIFECYCLE_AUDIT_DIR,
+        scratch_dir("dis_snapshot_lifecycle_"),
     )
     # a real mid-run interruption: pause lands before chunk 2
     polls = {"n": 0}

@@ -47,11 +47,6 @@ def round4(expr: str, alias: str) -> Column:
     return F.expr(f"ROUND(({expr}), 4)").alias(alias)
 
 
-def oracle_dec_sum(expr: str, alias: str) -> str:
-    """DuckDB twin of :func:`dec_sum` (identical semantics)."""
-    return f"SUM(CAST(({expr}) AS {DEC})) AS {alias}"
-
-
 def round4x(expr: str) -> Column:
     """Tie-free 4dp rounding for INTEGER-DERIVED ratios: floor(x·10⁴+0.5)
     is pure IEEE arithmetic, identical on both engines. ROUND(x,4) is NOT

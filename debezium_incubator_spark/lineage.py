@@ -27,9 +27,17 @@ be a caller decision.  This module makes it one:
   read it back.  Fully fault-tolerant (a lost executor re-reads the
   scratch files) and shareable across jobs, at the cost of one real
   write.  EAGER by construction (the write is an action at build time).
-  The scratch dir defaults to a fresh per-call tempdir reaped at process
-  exit — nothing persists across runs (no result caching), pass
-  ``scratch_dir`` to manage the lifecycle yourself.
+  The scratch dir defaults to a fresh :func:`scratch_dir` — nothing
+  persists across runs (no result caching), pass ``scratch_dir`` to
+  manage the lifecycle yourself.
+
+Scratch storage: every on-disk intermediate the engine makes for its own
+use lives in a :func:`scratch_dir`.  Such a dir is per-process (a fresh
+``mkdtemp`` per call), reaped at interpreter exit, and never shared
+across processes — so a frame built over it stays readable for the rest
+of the process, however often its query is built again.  The only
+fixed-path artifacts are the cross-process oracle audit indexes, which
+go through ``llm/_audit.ensure_artifact``.
 
 Why localCheckpoint-based strategies rather than ``persist()``:
 Spark's CacheManager keys cached plans by their ANALYZED plan, so a
@@ -63,6 +71,17 @@ def _reap_scratch() -> None:
 atexit.register(_reap_scratch)
 
 
+def scratch_dir(prefix: str) -> str:
+    """A fresh per-process scratch directory, removed at interpreter
+    exit (module docstring: scratch storage)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    _SCRATCH_DIRS.append(d)
+    return d
+
+
+_new_scratch_dir = scratch_dir  # ``cut``'s parameter shadows the name
+
+
 def cut(df: DataFrame, strategy: str = "local",
         scratch_dir: str | None = None) -> DataFrame:
     """Materialize ``df`` once and cut its lineage, per the module
@@ -75,10 +94,7 @@ def cut(df: DataFrame, strategy: str = "local",
         return df.localCheckpoint(eager=False,
                                   storageLevel=StorageLevel.DISK_ONLY)
     if strategy == "parquet":
-        d = scratch_dir
-        if d is None:
-            d = tempfile.mkdtemp(prefix="dis_cut_")
-            _SCRATCH_DIRS.append(d)
+        d = scratch_dir or _new_scratch_dir("dis_cut_")
         df.write.mode("overwrite").parquet(d)
         return df.sparkSession.read.parquet(d)
     raise ValueError(

@@ -28,9 +28,8 @@ makes a fixed /tmp path safe to share across processes and rebuilds:
   never deletes it either (an exiting probe JVM's blanket cleanup had
   destroyed a build the test suite was mid-write on).
 
-The IVF index in ``similarity.py`` predates this module and carries its
-own (behavior-identical, test-pinned) copy; new audit artifacts should
-use this one.
+Every fixed-path artifact goes through :func:`ensure_artifact`; the
+engine's per-process scratch goes through ``lineage.scratch_dir``.
 """
 
 from __future__ import annotations

@@ -450,36 +450,6 @@ def t42_bpe_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def tokens_sql(col: str, merges: list[tuple[str, str]] | None = None,
-               dialect: str = "spark") -> str:
-    """The token ARRAY (not just the count) as generated SQL — the
-    rendered replace-chain string IS the tokenization, so splitting on
-    the double separator recovers the tokens with zero Python. Same
-    dialect caveats as :func:`count_sql`."""
-    merges = merges if merges is not None else load_merges()
-    if dialect == "duckdb" and len(merges) > 100:
-        raise ValueError(
-            "DuckDB caps expression depth at 128 — use "
-            "oracle_docs_with_tokens() (staged CTEs) for the full "
-            "merges table"
-        )
-    if dialect == "spark" and len(merges) > 300:
-        raise ValueError(
-            "Spark's ANTLR parser stack-overflows on deeply nested "
-            "replace() text — use bpe_tokens_col() (Column-object "
-            "chain, no parser) for the full merges table"
-        )
-    if dialect == "spark":
-        base = f"regexp_replace({col}, '(?s)(.)', '{SEP}$1{SEP}')"
-        chain = _chain_sql(base, merges)
-        return f"split(btrim({chain}, '{SEP}'), '{SEP}{SEP}')"
-    if dialect == "duckdb":
-        base = f"regexp_replace({col}, '(.)', '{SEP}\\1{SEP}', 'gs')"
-        chain = _chain_sql(base, merges)
-        return f"string_split(trim({chain}, '{SEP}'), '{SEP}{SEP}')"
-    raise ValueError(f"unknown dialect {dialect!r}")
-
-
 def bpe_tokens_col(col: str = "text",
                    merges: list[tuple[str, str]] | None = None) -> Column:
     """JVM-side token extraction (array<string>) — the replace-chain

@@ -19,7 +19,6 @@ fixture scale the JVM expression path is faster than Python round-trips.
 
 from __future__ import annotations
 
-import atexit
 import hashlib
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -27,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import spread, table
 from ..registry import register
+from ._audit import ensure_artifact
 
 
 def dot(a, b) -> Column:
@@ -459,10 +459,9 @@ IVF_NPROBE = 4
 # assignment (KMeans is not SQL-replicable), so the engine persists the
 # index — assignment as a partition column plus the centroid routing
 # table, exactly the artifacts a production IVF index is — at a path the
-# static oracle SQL can read_parquet. Single-writer test artifact: the
-# sweep always runs the Spark query (which ensures/refreshes the index
-# for its sf_dir) before the oracle; cleaned at exit like the temp-dir
-# indexes.
+# static oracle SQL can read_parquet. The sweep always runs the Spark
+# query (which ensures/refreshes the index for its sf_dir) before the
+# oracle; the lifecycle is ``_audit.ensure_artifact``'s.
 IVF_AUDIT_DIR = "/tmp/dis_ivf_index_current"
 
 _FOLD = (
@@ -751,89 +750,18 @@ def ivf_probe(spark: SparkSession, index_dir: str, query_v: list[float],
     )
 
 
-#: build dirs THIS process created (see llm/_audit.py: since round 12
-#: an exiting process that merely reused the artifact must not delete
-#: a dir another process may be mid-build/mid-read on)
-_IVF_BUILT: set = set()
-
-
-def _cleanup_ivf_audit_dir() -> None:
-    """atexit hook: the audit index lives at a fixed /tmp path (the
-    static oracle SQL must be able to read_parquet it) and the
-    driver/sweep harness never cleans it explicitly. Removes the
-    stamped build dirs THIS PROCESS created, plus the symlink when it
-    points at one of them."""
-    import glob
-    import os
-    import shutil
-
-    mine = [d for d in glob.glob(IVF_AUDIT_DIR + "-*") if d in _IVF_BUILT]
-    try:
-        if os.path.islink(IVF_AUDIT_DIR):
-            if os.path.realpath(IVF_AUDIT_DIR) in (
-                os.path.realpath(d) for d in mine
-            ):
-                os.remove(IVF_AUDIT_DIR)
-        else:
-            shutil.rmtree(IVF_AUDIT_DIR, ignore_errors=True)  # legacy
-    except OSError:
-        pass
-    for d in mine:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-atexit.register(_cleanup_ivf_audit_dir)
-
-
 def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) the persisted IVF index for ``sf_dir`` at the
-    fixed audit path. A marker file records which source (path + mtime +
-    size of embeddings.parquet) the index was built from; mismatch —
-    sf switch mid-process, stale leftovers from a crashed run, fixture
-    regeneration — triggers a rebuild.
-
-    The fixed path is a SYMLINK to a stamp-named build dir, swapped by
-    atomic ``os.replace`` — so a concurrent reader (another pytest
-    process, an ad-hoc session) mid-query on the old target keeps a
-    consistent index instead of racing a mode=overwrite rewrite, and
-    the static oracle SQL still reads one fixed path. Build-then-marker
-    ordering inside the build dir makes a crash mid-build leave a
-    missing marker, never a lying one."""
-    import hashlib
+    fixed audit path (the :mod:`._audit` lifecycle: stamp on
+    embeddings.parquet, atomic symlink swap, locked builds, reader
+    refcount, exit cleanup of this process's builds)."""
     import os
-    import shutil
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    stamp = f"{src}\n{st.st_mtime_ns}:{st.st_size}"
-    build_dir = (
-        IVF_AUDIT_DIR + "-"
-        + hashlib.md5(stamp.encode()).hexdigest()[:10]
+    return ensure_artifact(
+        os.path.join(sf_dir, "embeddings.parquet"),
+        IVF_AUDIT_DIR,
+        lambda d: build_ivf_index(_vectors(spark, sf_dir), d),
     )
-    marker = os.path.join(build_dir, "_source")
-    valid = False
-    try:
-        with open(marker) as fh:
-            valid = fh.read() == stamp
-    except OSError:
-        pass
-    if not valid:
-        build_ivf_index(_vectors(spark, sf_dir), build_dir)
-        with open(marker, "w") as fh:
-            fh.write(stamp)
-        _IVF_BUILT.add(build_dir)
-    # point the fixed path at the build atomically
-    if os.path.realpath(IVF_AUDIT_DIR) != os.path.realpath(build_dir):
-        if os.path.isdir(IVF_AUDIT_DIR) and not os.path.islink(IVF_AUDIT_DIR):
-            shutil.rmtree(IVF_AUDIT_DIR, ignore_errors=True)  # legacy layout
-        tmp_link = f"{build_dir}.lnk"
-        try:
-            os.remove(tmp_link)
-        except OSError:
-            pass
-        os.symlink(build_dir, tmp_link)
-        os.replace(tmp_link, IVF_AUDIT_DIR)
-    return IVF_AUDIT_DIR
 
 
 @register("sim_ivf_probe", oracle=_IVF_INDEX_ORACLE)

@@ -35,15 +35,14 @@ complements DPP's directory-level skipping.
 
 from __future__ import annotations
 
-import atexit
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import table
 from ..exprs import DEC
+from ..lineage import scratch_dir
 from ..registry import register
 
 
@@ -69,12 +68,8 @@ def partitioned_sink(
     out.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 
-# One partitioned copy of `events` per (process, sf_dir) — the same
-# persisted-artifact lifecycle as the IVF index (llm/similarity.py):
-# build once into a temp dir, then every registered query probes it.
-# The copies are removed at interpreter exit (atexit on cleanup(),
-# below) so repeated driver/sweep runs do not accumulate directories
-# in /tmp.
+# One partitioned copy of `events` per (process, sf_dir), built once into
+# a ``lineage.scratch_dir``; every registered query then probes it.
 _EVENTS_PART_DIRS: dict[str, str] = {}
 
 
@@ -82,7 +77,7 @@ def events_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The `events` table re-laid-out as parquet partitioned by
     ``event_type`` (5 directories), clustered by ``ts`` inside each."""
     if sf_dir not in _EVENTS_PART_DIRS:
-        d = tempfile.mkdtemp(prefix="dis_part_events_")
+        d = scratch_dir("dis_part_events_")
         partitioned_sink(
             table(spark, sf_dir, "events"), d, ["event_type"],
             cluster_by=["ts"],
@@ -205,20 +200,6 @@ def runtime_filter_conf(
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold":
             application_side_threshold,
     }
-
-
-def cleanup() -> None:
-    """Drop the per-process partitioned copies. Registered atexit so
-    the driver/sweep harness (which never calls it explicitly) does not
-    leak one directory per (process, sf_dir) into /tmp."""
-    import shutil
-
-    for d in _EVENTS_PART_DIRS.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _EVENTS_PART_DIRS.clear()
-
-
-atexit.register(cleanup)
 
 
 def _dir_partitions(path: str, col: str) -> list[str]:

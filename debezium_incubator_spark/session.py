@@ -67,18 +67,20 @@ def _ship_package(spark: SparkSession) -> None:
     driver, a real cluster) has no reason to have the repo on the
     workers' PYTHONPATH; zipping the package and addPyFile-ing it is the
     standard deployment pattern and works identically on local and
-    cluster masters. Idempotent per SparkContext.
+    cluster masters. Idempotent per SparkContext. The zip lives in a
+    ``lineage.scratch_dir``: removed at exit, not earlier, because
+    cluster executors fetch it from the driver.
     """
     sc = spark.sparkContext
     if getattr(sc, "_dis_pkg_shipped", False):
         return
     import pathlib
-    import tempfile
     import zipfile
 
+    from .lineage import scratch_dir
+
     pkg_dir = pathlib.Path(__file__).parent
-    fd, zpath = tempfile.mkstemp(suffix=".zip", prefix="dis_pkg_")
-    os.close(fd)
+    zpath = os.path.join(scratch_dir("dis_pkg_"), "dis_pkg.zip")
     with zipfile.ZipFile(zpath, "w") as z:
         for f in sorted(pkg_dir.rglob("*.py")):
             z.write(f, arcname=str(f.relative_to(pkg_dir.parent)))

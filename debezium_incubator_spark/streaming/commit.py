@@ -57,6 +57,18 @@ def read_pointer(tier_dir: str) -> str | None:
         return None
 
 
+def parse_version(name: str) -> tuple[int, str] | None:
+    """A version dir name as ``(epoch, run_id)``: ``v{n}`` gives
+    ``(n, "")``, commitlog's lineage-qualified ``v{n}_{run_id}`` gives
+    ``(n, run_id)``. Any other name gives None."""
+    if not name.startswith("v"):
+        return None
+    num, _, run_id = name[1:].partition("_")
+    if not num.isdigit():
+        return None
+    return int(num), run_id
+
+
 def read_latest(spark: SparkSession, tier_dir: str) -> DataFrame:
     """Read the parquet artifact the pointer names."""
     name = read_pointer(tier_dir)

@@ -61,21 +61,6 @@ def tumbling_counts(df: DataFrame, ts_col: str = "ts",
     )
 
 
-def sliding_counts(df: DataFrame, ts_col: str = "ts",
-                   delay: str | None = "10 minutes") -> DataFrame:
-    """I3: 1h windows sliding every 30min (twin of e3_sliding_window)."""
-    return (
-        (df.withWatermark(ts_col, delay) if delay else df)
-        .groupBy(F.window(ts_col, "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.col("w.start").cast("timestamp_ntz").alias("wstart"),
-            "event_type",
-            "n",
-        )
-    )
-
-
 def session_counts(df: DataFrame, ts_col: str = "ts",
                    gap: str = "30 minutes",
                    delay: str | None = "10 minutes") -> DataFrame:
@@ -157,18 +142,6 @@ def run_available_now(stream_df: DataFrame, name: str,
     )
     q.awaitTermination()
     return q
-
-
-def parquet_sink(stream_df: DataFrame, path: str, checkpoint: str,
-                 output_mode: str = "append"):
-    """A8: materialized-state file sink with checkpoint recovery (I9)."""
-    return (
-        stream_df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-        .start()
-    )
 
 
 def distinct_user_counts(df: DataFrame, ts_col: str = "ts") -> DataFrame:

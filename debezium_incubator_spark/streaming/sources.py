@@ -116,15 +116,15 @@ def events_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``nanosAsLong`` → integer-divide to µs; timestamp[us] reads natively
     as TIMESTAMP_NTZ → plain cast)."""
     import os
-    import tempfile
 
+    from ..lineage import scratch_dir
     from ..session import ensure_conf
 
     ensure_conf(spark)
     # The file stream source requires a directory; expose the single
-    # fixture file through a symlinked temp dir (fixtures are read-only).
+    # fixture file through a symlinked scratch dir (fixtures are read-only).
     src = os.path.join(sf_dir, "events.parquet")
-    stage = tempfile.mkdtemp(prefix="events_stream_")
+    stage = scratch_dir("events_stream_")
     os.symlink(src, os.path.join(stage, "events.parquet"))
     batch_schema = spark.read.parquet(src).schema
     raw = spark.readStream.schema(batch_schema).parquet(stage)

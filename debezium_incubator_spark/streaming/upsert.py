@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .commit import commit_pointer, read_pointer
+from .commit import commit_pointer, parse_version, read_pointer
 
 
 def _latest_path(state_dir: str) -> str | None:
@@ -54,19 +54,29 @@ def read_state(
     return _visible(spark.read.parquet(p), include_tombstones, op_col)
 
 
-def list_versions(state_dir: str) -> list[int]:
-    """Committed state epochs, ascending. A ``v{n}`` directory counts
-    only if n <= the committed pointer — a crash between the version
+def _committed_versions(state_dir: str) -> dict[int, str]:
+    """Committed epoch -> version dir name. A version dir counts only if
+    its epoch is <= the committed pointer's — a crash between the version
     write and the pointer update leaves an orphan directory that must not
-    be served (the protocol's commit point IS the pointer)."""
+    be served (the protocol's commit point IS the pointer) — and only if
+    it has the pointer's run id (commitlog's ``v{n}_{run_id}``; another
+    checkpoint lineage's dirs are not this state's history)."""
     name = read_pointer(state_dir)
-    if name is None:
-        return []
-    committed = int(name.lstrip("v"))
-    return sorted(
-        int(n[1:]) for n in os.listdir(state_dir)
-        if n.startswith("v") and n[1:].isdigit() and int(n[1:]) <= committed
-    )
+    head = parse_version(name) if name is not None else None
+    if head is None:
+        return {}
+    committed, run_id = head
+    out = {}
+    for n in os.listdir(state_dir):
+        v = parse_version(n)
+        if v is not None and v[1] == run_id and v[0] <= committed:
+            out[v[0]] = n
+    return out
+
+
+def list_versions(state_dir: str) -> list[int]:
+    """Committed state epochs, ascending (see :func:`_committed_versions`)."""
+    return sorted(_committed_versions(state_dir))
 
 
 def read_state_at(
@@ -85,16 +95,17 @@ def read_state_at(
     versions exist but all are newer): "that history was GC'd" must be
     loud, not an empty result a consumer could mistake for "no state
     existed then". Returns None only when NO version is committed."""
-    committed = list_versions(state_dir)
+    names = _committed_versions(state_dir)
+    committed = sorted(names)
     versions = [v for v in committed if v <= epoch]
     if not versions:
         if committed:
             raise ValueError(
                 f"epoch {epoch} predates the vacuum horizon of {state_dir}; "
-                f"oldest retained version is v{committed[0]}"
+                f"oldest retained version is {names[committed[0]]}"
             )
         return None
-    df = spark.read.parquet(os.path.join(state_dir, f"v{versions[-1]}"))
+    df = spark.read.parquet(os.path.join(state_dir, names[versions[-1]]))
     return _visible(df, include_tombstones, op_col)
 
 
@@ -234,8 +245,8 @@ def vacuum_versions(state_dir: str, keep_last: int = 2) -> list[str]:
 
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    removed = []
-    for v in list_versions(state_dir)[:-keep_last]:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-        removed.append(f"v{v}")
+    names = _committed_versions(state_dir)
+    removed = [names[v] for v in sorted(names)[:-keep_last]]
+    for n in removed:
+        shutil.rmtree(os.path.join(state_dir, n))
     return removed

@@ -1,8 +1,9 @@
-"""Dump ``explain('formatted')`` for named queries into plans/r14/.
+"""Dump ``explain('formatted')`` for named queries into plans/<round>/.
 
-Usage: python scripts/dump_plan_r14.py before q1,q2,...   (or: after ...)
-Writes plans/r14/<query>_<tag>.txt — the judge-checkable evidence for
-every plan claim in OPTIMIZATION_r14.md.
+Usage: python scripts/dump_plan.py ROUND TAG q1,q2,... [SF_DIR]
+       e.g. python scripts/dump_plan.py r14 before q1,q2
+Writes plans/<round>/<query>_<tag>.txt — the checkable evidence for
+every plan claim in OPTIMIZATION_<round>.md.
 """
 
 from __future__ import annotations
@@ -19,15 +20,15 @@ from debezium_incubator_spark.session import get_spark  # noqa: E402
 
 
 def main() -> int:
-    tag = sys.argv[1]
-    names = sys.argv[2].split(",")
-    sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
+    rnd, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3].split(",")
+    sf_dir = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf0.1"
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans", "r14",
+        "plans", rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("dump_plan_r14")
+    spark = get_spark(f"dump_plan_{rnd}")
     queries = all_queries()
     for name in names:
         df = queries[name](spark, sf_dir)

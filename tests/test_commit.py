@@ -1,6 +1,6 @@
 """The versioned-state commit protocol (streaming/commit.py) and the two
 vacuums built on it, checked on hand-made layouts: plain files, no Spark
-job."""
+job except the one ``read_state_at`` read of a commitlog layout."""
 
 from __future__ import annotations
 
@@ -123,3 +123,41 @@ def test_vacuums_refuse_keep_last_below_one(tmp_path):
         with pytest.raises(ValueError, match="keep_last"):
             vacuum_versions(mono, keep_last=keep)
     assert _tree(mono) == before
+
+
+def test_versions_resolve_commitlog_names(spark, tmp_path):
+    """commitlog names its versions ``v{epoch}_{run_id}``: the listing,
+    the time-travel read and the vacuum resolve the real dir names, and
+    skip an orphan newer than the pointer and another run's dirs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from debezium_incubator_spark.streaming.commit import parse_version
+    from debezium_incubator_spark.streaming.upsert import (
+        list_versions,
+        read_state_at,
+        vacuum_versions,
+    )
+
+    assert parse_version("v12") == (12, "")
+    assert parse_version("v3_run-A") == (3, "run-A")
+    assert parse_version("vx_run-A") is None
+
+    state = str(tmp_path / "state")
+    # v2_run-A is an orphan (newer than the pointer); v0_run-B belongs
+    # to another checkpoint lineage
+    for e, run in ((0, "A"), (1, "A"), (2, "A"), (0, "B")):
+        d = os.path.join(state, f"v{e}_run-{run}")
+        os.makedirs(d)
+        pq.write_table(
+            pa.table({"k": [1], "v": [e], "__op": ["u"]}),
+            os.path.join(d, "part-0.parquet"),
+        )
+    _touch(os.path.join(state, "_LATEST"), "v1_run-A")
+
+    assert list_versions(state) == [0, 1]
+    assert [r.v for r in read_state_at(spark, state, 0).collect()] == [0]
+    assert vacuum_versions(state, keep_last=1) == ["v0_run-A"]
+    assert sorted(os.listdir(state)) == [
+        "_LATEST", "v0_run-B", "v1_run-A", "v2_run-A",
+    ]

@@ -5,6 +5,8 @@ posture."""
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
 from pyspark.sql import functions as F
 
@@ -57,3 +59,27 @@ def test_cut_unknown_strategy_raises(spark):
         assert "replicated" in str(e)
     else:  # pragma: no cover
         raise AssertionError("unknown strategy must raise")
+
+
+def test_scratch_dir_lives_until_process_exit():
+    """A child process (no Spark session) makes a scratch dir: the dir
+    exists while the child runs and is gone once it exits."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.Popen(
+        [
+            sys.executable, "-c",
+            "import sys\n"
+            "from debezium_incubator_spark.lineage import scratch_dir\n"
+            "print(scratch_dir('dis_test_'), flush=True)\n"
+            "sys.stdin.read()\n",
+        ],
+        cwd=root, stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+    )
+    d = child.stdout.readline().strip()
+    try:
+        assert os.path.basename(d).startswith("dis_test_")
+        assert os.path.isdir(d)
+    finally:
+        child.communicate("")  # EOF on stdin: the child exits
+    assert child.returncode == 0
+    assert not os.path.exists(d)
